@@ -16,8 +16,8 @@ src/zone_ext.rs:279-284) redesigned for 10^12 rows:
   interior points skip the geometry test entirely — only boundary-cell
   points pay for exact PIP (the dominant cost saver at scale: interior
   cells vastly outnumber boundary cells at fine resolutions);
-* points covered by no zone optionally fall back to kNN on zone
-  centroids (nearest-zone lookup).
+* points covered by no zone optionally fall back to kNN on geometry
+  centroids, both strategies (nearest-zone lookup).
 
 The per-zone choice mirrors build_hierarchy: smallest zone_type wins,
 tie-broken by (area, zone_id) — deterministic under any partitioning.
@@ -33,6 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from cosmospark import cells, geom
 from cosmospark.ztypes import TYPE_RANK
+
+# rank of a zone whose zone_type is unknown: after every known type
+UNKNOWN_TYPE_RANK = len(TYPE_RANK)
 
 DEFAULT_RESOLUTIONS = (4, 7, 9)
 DEFAULT_TILE_Z = 12
@@ -67,82 +70,100 @@ def auto_max_cells(n_zones: int, cell_budget: int = INDEX_CELL_BUDGET) -> int:
 # Zone index (driver-built, broadcast)
 
 
+def zone_cover(rings: list, max_cells: int) -> tuple[int, np.ndarray, np.ndarray]:
+    """→ (res, cells, full): the zone's bbox covered by ≤ ``max_cells``
+    cells at the finest fitting resolution, each flagged FULL when the
+    whole cell lies inside the zone (its points skip PIP). FULL is
+    marked vectorized across the cells (corners-inside + no-edge-overlap
+    — conservative but O(k)). The one covering both strategies use."""
+    minx, miny, maxx, maxy = geom.bbox(rings)
+    res = cells.fit_res(minx, miny, maxx, maxy, max_cells)
+    cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
+    return res, cc, geom.rects_fully_covered(*cells.cell_bounds_batch(cc, res), rings)
+
+
+def nearest_centroid(
+    lon: np.ndarray, lat: np.ndarray, ids: np.ndarray, cx: np.ndarray, cy: np.ndarray
+) -> np.ndarray:
+    """→ id of the nearest centroid per point (brute force: the zone dim
+    is broadcast-scale). ``ids`` ascending, so argmin's first-hit
+    tie-break picks the smallest zone id — the oracle's ORDER BY d2, id."""
+    d2 = (lon[:, None] - cx[None, :]) ** 2 + (lat[:, None] - cy[None, :]) ** 2
+    return ids[np.argmin(d2, axis=1)]
+
+
+def _centroid_arrays(cents) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(zone_id, cx, cy) tuples → ``nearest_centroid``'s id-sorted
+    (ids, cx, cy) arrays."""
+    cents = sorted(cents)
+    return (
+        np.array([c[0] for c in cents], dtype=np.int64),
+        np.array([c[1] for c in cents], dtype=np.float64),
+        np.array([c[2] for c in cents], dtype=np.float64),
+    )
+
+
 class ZoneIndex:
     """Per-(res, cell) candidate lists + packed geometries, CSR-encoded
-    per resolution for vectorized numpy lookup inside Arrow batches."""
+    per resolution for vectorized numpy lookup inside Arrow batches.
+    Misses optionally fall back to kNN on geometry centroids (both
+    strategies)."""
 
     def __init__(self, zone_rows: list[dict], max_cells: int | None = None):
         if max_cells is None:
             max_cells = auto_max_cells(len(zone_rows))
         self.geoms: dict[int, list] = {}
-        self.rank: dict[int, int] = {}
-        self.area: dict[int, float] = {}
-        cent_ids, cent_x, cent_y = [], [], []
-        buckets: dict[tuple[int, int], list[tuple[int, bool]]] = {}
+        zids, ranks, areas, cents = [], [], [], []
+        cover_res, cover_cells, cover_full = [], [], []
 
         for row in zone_rows:
-            zid = int(row["id"])
-            rings = geom.rows_to_rings(row["rings"]) if row["rings"] else None
-            if rings is None:
+            if not row["rings"]:
                 continue
+            zid = int(row["id"])
+            rings = geom.rows_to_rings(row["rings"])
             self.geoms[zid] = rings
-            rk = TYPE_RANK.get(row.get("zone_type"), len(TYPE_RANK))
-            self.rank[zid] = rk
-            a = geom.area(rings)
-            self.area[zid] = a
+            zids.append(zid)
+            ranks.append(TYPE_RANK.get(row.get("zone_type"), UNKNOWN_TYPE_RANK))
+            areas.append(geom.area(rings))
             c = geom.centroid(rings)
             if c is not None:
-                cent_ids.append(zid)
-                cent_x.append(c[0])
-                cent_y.append(c[1])
-            minx, miny, maxx, maxy = geom.bbox(rings)
-            res = cells.fit_res(minx, miny, maxx, maxy, max_cells)
-            cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-            # FULL = the whole cell is inside the zone → PIP skipped for
-            # its points; marked vectorized across the zone's cells
-            # (corners-inside + no-edge-overlap — conservative but O(k))
-            if len(cc):
-                cminx, cminy, cmaxx, cmaxy = cells.cell_bounds_batch(cc, res)
-                fulls_v = geom.rects_fully_covered(cminx, cminy, cmaxx, cmaxy, rings)
-            else:
-                fulls_v = np.zeros(0, dtype=bool)
-            for cell, full in zip(cc, fulls_v):
-                buckets.setdefault((res, int(cell)), []).append((zid, bool(full)))
+                cents.append((zid, *c))
+            res, cc, full = zone_cover(rings, max_cells)
+            cover_res.append(res)
+            cover_cells.append(cc)
+            cover_full.append(full)
 
         # dense rank/area lookup arrays (vectorized candidate scoring)
-        self._zid_sorted = np.array(sorted(self.rank), dtype=np.int64)
-        self._rank_arr = np.array([self.rank[z] for z in self._zid_sorted], dtype=np.int64)
-        self._area_arr = np.array([self.area[z] for z in self._zid_sorted], dtype=np.float64)
+        zid_a = np.array(zids, dtype=np.int64)
+        order = np.argsort(zid_a, kind="stable")
+        self._zid_sorted = zid_a[order]
+        self._rank_arr = np.array(ranks, dtype=np.int64)[order]
+        self._area_arr = np.array(areas, dtype=np.float64)[order]
 
-        self.centroid_ids = np.array(cent_ids, dtype=np.int64)
-        self.centroid_x = np.array(cent_x, dtype=np.float64)
-        self.centroid_y = np.array(cent_y, dtype=np.float64)
+        self.centroid_ids, self.centroid_x, self.centroid_y = _centroid_arrays(cents)
 
-        # CSR per resolution
-        self.res_list: list[int] = sorted({r for (r, _) in buckets})
+        # CSR per resolution: one stable sort of every (res, cell, zone,
+        # full) entry keeps each cell's zones in input order
+        n = [len(cc) for cc in cover_cells]
+        res_a = np.repeat(np.array(cover_res, dtype=np.int64), n)
+        cell_a = np.concatenate(cover_cells + [np.zeros(0, np.int64)])
+        order = np.lexsort((cell_a, res_a))
+        res_a, cell_a = res_a[order], cell_a[order]
+        zid_a = np.repeat(zid_a, n)[order]
+        full_a = np.concatenate(cover_full + [np.zeros(0, bool)])[order]
+        res_vals, res_starts = np.unique(res_a, return_index=True)
+        res_ends = np.append(res_starts[1:], len(res_a))
+        self.res_list: list[int] = [int(r) for r in res_vals]
         self.csr: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-        for res in self.res_list:
-            items = sorted((c, v) for (r, c), v in buckets.items() if r == res)
-            cell_ids = np.array([c for c, _ in items], dtype=np.int64)
-            offs = np.zeros(len(items) + 1, dtype=np.int64)
-            zids, fulls = [], []
-            for i, (_, v) in enumerate(items):
-                offs[i + 1] = offs[i] + len(v)
-                for zid, full in v:
-                    zids.append(zid)
-                    fulls.append(full)
-            self.csr[res] = (
-                cell_ids,
-                offs,
-                np.array(zids, dtype=np.int64),
-                np.array(fulls, dtype=bool),
-            )
+        for res, lo, hi in zip(self.res_list, res_starts, res_ends):
+            cell_ids, starts = np.unique(cell_a[lo:hi], return_index=True)
+            offs = np.append(starts, hi - lo).astype(np.int64)
+            self.csr[res] = (cell_ids, offs, zid_a[lo:hi], full_a[lo:hi])
 
     # ---- batch kernels ----
 
     def candidates(self, lon: np.ndarray, lat: np.ndarray):
         """→ (pt_idx, zone_id, full) candidate triples for a point batch."""
-        n = len(lon)
         if not self.res_list:
             return (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, bool))
         finest = max(self.res_list)
@@ -212,12 +233,9 @@ class ZoneIndex:
 
         if knn_fallback and (out == -1).any() and len(self.centroid_ids):
             miss = np.nonzero(out == -1)[0]
-            # brute-force nearest centroid (zone dim is broadcast-scale;
-            # the scale path would pre-bucket centroids by coarse cell)
-            d2 = (lon[miss, None] - self.centroid_x[None, :]) ** 2 + (
-                lat[miss, None] - self.centroid_y[None, :]
-            ) ** 2
-            out[miss] = self.centroid_ids[np.argmin(d2, axis=1)]
+            out[miss] = nearest_centroid(
+                lon[miss], lat[miss], self.centroid_ids, self.centroid_x, self.centroid_y
+            )
         return out
 
 
@@ -289,7 +307,9 @@ _REFINE_BUCKET_ROWS = 50_000
 
 def _refine_buckets(points: DataFrame, explode_factor: int) -> int:
     """Bucket count for the cogroup PIP refine, derived from the fact
-    side's Catalyst size estimate (free — no job). r7: the refine used
+    side's Catalyst size estimate (free — no job). ``points`` is the
+    (id, lon, lat) projection the refine shuffles, so the bytes-based
+    fallback does not count the caller's wide payload columns. r7: the refine used
     to cogroup directly on (res, cell), which at a fine zone index
     means tens of thousands of TINY groups — and per-group
     Arrow↔pandas overhead, not PIP arithmetic, measured as ~90 % of the
@@ -330,6 +350,20 @@ def estimate_zone_geom_bytes(zones: DataFrame) -> int:
     return int(row["geom"] or 0) + 200 * int(row["n"])
 
 
+def _pick_strategy(
+    strategy: str, zones: DataFrame, broadcast_budget_bytes: int, id_col: str | None
+) -> str:
+    """The one budget rule behind ``strategy="auto"``; other values pass
+    through."""
+    if strategy not in ("auto", "broadcast", "partitioned"):
+        raise ValueError(f"unknown assign strategy {strategy!r}")
+    if strategy != "auto":
+        return strategy
+    if id_col is None or estimate_zone_geom_bytes(zones) <= broadcast_budget_bytes:
+        return "broadcast"
+    return "partitioned"
+
+
 def assign_zones(
     points: DataFrame,
     zones: DataFrame,
@@ -340,10 +374,10 @@ def assign_zones(
     strategy: str = "broadcast",
     id_col: str | None = None,
     broadcast_budget_bytes: int = BROADCAST_BUDGET_BYTES,
-    raster_res: int = 9,
     n_salt: int | None = None,
 ) -> DataFrame:
-    """points + zone_id (long, -1 if unassigned and no kNN fallback).
+    """points + zone_id (long, -1 if unassigned and no kNN fallback;
+    kNN on geometry centroids, both strategies).
 
     strategy:
       * ``broadcast`` — compile the zone dim into a per-cell index on the
@@ -356,27 +390,13 @@ def assign_zones(
         resolves the zone. Requires ``id_col`` (a unique point key).
         This is the fallback for zone tables above broadcast budget
         (planet-scale detailed geometry can be tens of GB);
-      * ``raster`` — PIXEL-APPROXIMATE assignment via the per-cell
-        pixel LUT (``raster.zone_pixel_lut``): zero Python and zero
-        shuffle on the fact side; half-pixel boundary error at
-        ``raster_res`` (see ``raster.assign_zones_raster``);
-      * ``auto`` — measure the geometry size JVM-side and pick an exact
-        strategy (never the approximate raster path).
-    """
-    if strategy == "raster":
-        from cosmospark.raster import assign_zones_raster
+      * ``auto`` — broadcast while the JVM-side geometry estimate fits
+        ``broadcast_budget_bytes``, else partitioned; without ``id_col``
+        (which partitioned needs) always broadcast.
 
-        return assign_zones_raster(
-            points, zones, res=raster_res, lon_col=lon_col, lat_col=lat_col,
-            id_col=id_col or "pid",
-        )
-    if strategy == "auto":
-        est = estimate_zone_geom_bytes(zones)
-        strategy = (
-            "broadcast"
-            if est <= broadcast_budget_bytes or id_col is None
-            else "partitioned"
-        )
+    The pixel-LUT raster join is ``raster.assign_zones_raster``.
+    """
+    strategy = _pick_strategy(strategy, zones, broadcast_budget_bytes, id_col)
     if strategy == "partitioned":
         if id_col is None:
             raise ValueError("partitioned strategy requires id_col (unique point key)")
@@ -421,17 +441,22 @@ _ZONE_CELLS_SCHEMA = T.StructType(
         # pyspark's cogroup Arrow deserializer (mapInPandas is fine);
         # the flat encoding also shrinks the shuffle payload
         T.StructField("rings_bin", T.BinaryType()),
-        # geom.area of the SAME numpy rings the broadcast ZoneIndex
-        # uses — bit-identical argmin tie-break across both strategies
+        # geom.area / geom.centroid of the SAME numpy rings the
+        # broadcast ZoneIndex uses — bit-identical argmin tie-break and
+        # kNN fallback across both strategies
         T.StructField("area", T.DoubleType()),
+        T.StructField("cx", T.DoubleType()),
+        T.StructField("cy", T.DoubleType()),
     ]
 )
 
 
 def _zone_cells_with_full(zones: DataFrame, max_cells: int) -> DataFrame:
-    """(zone_id, res, cell, full, rank, area, rings_bin) — the
-    distributed twin of the ZoneIndex CSR buckets, kept as a DataFrame
-    instead of a driver-pickled broadcast."""
+    """(zone_id, rank, area, rings_bin, cx, cy, res, cell, full) — the
+    distributed twin of the ZoneIndex CSR entries (same ``zone_cover``),
+    kept as a DataFrame instead of a driver-pickled broadcast. Zones
+    without rings have no cells and so no rows; (cx, cy) is the geometry
+    centroid, NULL when degenerate."""
     from cosmospark.hierarchy import type_rank_col
 
     @F.pandas_udf(_ZONE_CELLS_SCHEMA)
@@ -439,40 +464,31 @@ def _zone_cells_with_full(zones: DataFrame, max_cells: int) -> DataFrame:
         out = []
         for rows in rings_s:
             if rows is None or len(rows) == 0:
-                out.append({"cells": [], "rings_bin": b"", "area": 0.0})
+                out.append(
+                    {"cells": [], "rings_bin": b"", "area": 0.0, "cx": None, "cy": None}
+                )
                 continue
             rr = geom.rows_to_rings(rows)
-            minx, miny, maxx, maxy = geom.bbox(rr)
-            res = cells.fit_res(minx, miny, maxx, maxy, max_cells)
-            cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-            if len(cc):
-                cminx, cminy, cmaxx, cmaxy = cells.cell_bounds_batch(cc, res)
-                fv = geom.rects_fully_covered(cminx, cminy, cmaxx, cmaxy, rr)
-            else:
-                fv = np.zeros(0, dtype=bool)
+            res, cc, fv = zone_cover(rr, max_cells)
             acc = [
                 {"res": res, "cell": int(c), "full": bool(f)}
                 for c, f in zip(cc, fv)
             ]
+            cx, cy = geom.centroid(rr) or (None, None)
             out.append(
-                {"cells": acc, "rings_bin": geom.pack_rings(rr), "area": geom.area(rr)}
+                {"cells": acc, "rings_bin": geom.pack_rings(rr), "area": geom.area(rr),
+                 "cx": cx, "cy": cy}
             )
         return pd.DataFrame(out)
 
-    rank = F.coalesce(type_rank_col(F.col("zone_type")), F.lit(len(TYPE_RANK)))
+    rank = F.coalesce(type_rank_col(F.col("zone_type")), F.lit(UNKNOWN_TYPE_RANK))
     z = zones.select(
         F.col("id").alias("zone_id"), rank.alias("rank"), F.col("rings")
     ).withColumn("rc", _cells("rings"))
     return z.select(
-        "zone_id", "rank",
-        F.col("rc.area").alias("area"),
-        F.col("rc.rings_bin").alias("rings_bin"),
+        "zone_id", "rank", "rc.area", "rc.rings_bin", "rc.cx", "rc.cy",
         F.explode("rc.cells").alias("e"),
-    ).select(
-        "zone_id", "rank", "area", "rings_bin",
-        F.col("e.res").alias("res"), F.col("e.cell").alias("cell"),
-        F.col("e.full").alias("full"),
-    )
+    ).select("zone_id", "rank", "area", "rings_bin", "cx", "cy", "e.res", "e.cell", "e.full")
 
 
 def assign_zones_partitioned(
@@ -663,7 +679,7 @@ def assign_zones_partitioned(
     # the key-only semi-join drops the rest map-side, which also kills
     # the ~N(point cells) empty python groups the round-2 cogroup paid
     # for (every point cell with no zone at that res invoked the UDF).
-    zref = zcells.filter(~F.col("full"))
+    zref = zcells.filter(~F.col("full")).drop("cx", "cy")
     pref = pcells.join(
         _maybe_bc(zref.select("res", "cell").distinct()), ["res", "cell"], "leftsemi"
     )
@@ -724,7 +740,7 @@ def assign_zones_partitioned(
     # (res, cell[, salt]) — see _refine_buckets. Salted sub-groups of a
     # hot cell hash to different buckets, so the salting contract (one
     # megacity cell never lands on one task) is preserved.
-    n_buckets = _refine_buckets(points, len(res_list))
+    n_buckets = _refine_buckets(pts, len(res_list))
     bcol = F.pmod(F.xxhash64(*group_keys), F.lit(n_buckets))
     cand = (
         pref.withColumn("_b", bcol)
@@ -743,33 +759,33 @@ def assign_zones_partitioned(
     ).withColumn("zone_id", F.coalesce(F.col("zone_id"), F.lit(-1)).cast("long"))
 
     if knn_fallback:
-        # centroids are tiny at any scale → always broadcastable
-        cent_rows = [
-            (int(r["id"]), r["center"]["lon"], r["center"]["lat"])
-            for r in zones.select("id", "center").collect()
-            if r["center"] is not None
-        ]
-        if cent_rows:
-            ids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-            cx = np.array([r[1] for r in cent_rows], dtype=np.float64)
-            cy = np.array([r[2] for r in cent_rows], dtype=np.float64)
-            bc = spark.sparkContext.broadcast((ids, cx, cy))
-            out_schema = T.StructType(out.schema.fields)
+        # the same geometry centroids as ZoneIndex, from the UDF that
+        # already unpacked the rings: tiny at any scale → broadcastable
+        cents = _centroid_arrays(
+            (int(r["zone_id"]), r["cx"], r["cy"])
+            for r in zcells.filter(F.col("cx").isNotNull())
+            .select("zone_id", "cx", "cy")
+            .dropDuplicates(["zone_id"])
+            .collect()
+        )
+        if len(cents[0]):
+            bc = spark.sparkContext.broadcast(cents)
 
             def _knn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 kids, kx, ky = bc.value
                 for pdf in batches:
-                    miss = pdf["zone_id"].to_numpy() == -1
+                    vals = pdf["zone_id"].to_numpy().copy()
+                    miss = vals == -1
                     if miss.any():
-                        lon = pdf.loc[miss, lon_col].to_numpy(dtype=np.float64)
-                        lat = pdf.loc[miss, lat_col].to_numpy(dtype=np.float64)
-                        d2 = (lon[:, None] - kx[None, :]) ** 2 + (lat[:, None] - ky[None, :]) ** 2
-                        vals = pdf["zone_id"].to_numpy().copy()
-                        vals[miss] = kids[np.argmin(d2, axis=1)]
+                        vals[miss] = nearest_centroid(
+                            pdf.loc[miss, lon_col].to_numpy(dtype=np.float64),
+                            pdf.loc[miss, lat_col].to_numpy(dtype=np.float64),
+                            kids, kx, ky,
+                        )
                         pdf["zone_id"] = vals
                     yield pdf
 
-            out = out.mapInPandas(_knn, out_schema)
+            out = out.mapInPandas(_knn, out.schema)
     return out
 
 
@@ -847,12 +863,7 @@ def assign_images(
     encode_points + the partitioned cell-cogroup assignment (two narrow
     passes + one shuffle instead of shipping multi-GB geometry to every
     executor)."""
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if estimate_zone_geom_bytes(zones) <= broadcast_budget_bytes
-            else "partitioned"
-        )
+    strategy = _pick_strategy(strategy, zones, broadcast_budget_bytes, id_col)
     if strategy == "partitioned":
         enc = encode_points(images, resolutions=resolutions, tile_z=tile_z)
         assigned = assign_zones_partitioned(

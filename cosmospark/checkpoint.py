@@ -9,9 +9,10 @@ tiny JSON snapshot manifest, committed via atomic directory rename:
                                      {path, rows, bytes}], committed_at}
     <root>/<stage>/part-*.parquet
 
-``run_stage`` is the resume point: if a committed manifest exists the
-stage is *skipped* and its parquet is read back; otherwise the stage
-function runs, writes to a temp dir, and the rename publishes it.
+``run_stage_fp`` is the resume point: if a committed manifest exists
+(with a matching input fingerprint) the stage is *skipped* and its
+parquet is read back; otherwise the stage function runs, writes to a
+temp dir, and the rename publishes it.
 (The reference's analog is its streaming JSONL sink for bounded-memory
 planet builds, cosmogony/src/read.rs:7-14 + README.md:55-62.)
 """
@@ -96,29 +97,6 @@ def read_manifest(root: str, stage: str) -> dict:
         return json.load(fh)
 
 
-def run_stage(spark: SparkSession, root: str | None, stage: str, fn) -> DataFrame:
-    """Resumable stage: reuse a committed snapshot, else compute+commit.
-
-    With root=None no parquet snapshot is written, but the stage output
-    is still ``localCheckpoint``-ed: stage boundaries MUST truncate the
-    logical plan either way. Downstream stages (iterative parent-chain
-    joins, label fan-out) reference their input many times over — on a
-    deep base lineage (e.g. the raw-OSM extraction: ring-assembly
-    applyInPandas + window + joins) the composed plan tree grows
-    multiplicatively and Catalyst/AQE plan handling alone can OOM the
-    driver. The zone dim is broadcast-scale, so materializing each stage
-    is cheap; at planet scale pass ``root`` and stages become parquet
-    snapshots (which truncate lineage by construction, plus resume).
-    """
-    if root is None:
-        return fn().localCheckpoint(eager=True)
-    if is_committed(root, stage):
-        return read_stage(spark, root, stage)
-    df = fn()
-    write_stage(df, root, stage)
-    return read_stage(spark, root, stage)
-
-
 def compact_stage(
     spark: SparkSession,
     root: str,
@@ -157,10 +135,23 @@ def compact_stage(
 def run_stage_fp(
     spark: SparkSession, root: str | None, stage: str, fingerprint: str | None, fn
 ) -> DataFrame:
-    """run_stage with an input fingerprint: a committed snapshot is
-    reused ONLY if its recorded fingerprint matches — otherwise the
-    stage recomputes (silently reusing a stale snapshot after inputs or
-    code changed is the checkpoint footgun)."""
+    """Resumable stage: reuse a committed snapshot, else compute+commit.
+
+    A committed snapshot is reused ONLY if its recorded fingerprint
+    matches — otherwise the stage recomputes (silently reusing a stale
+    snapshot after inputs or code changed is the checkpoint footgun).
+    ``fingerprint=None`` reuses any committed snapshot.
+
+    With root=None no parquet snapshot is written, but the stage output
+    is still ``localCheckpoint``-ed: stage boundaries MUST truncate the
+    logical plan either way. Downstream stages (iterative parent-chain
+    joins, label fan-out) reference their input many times over — on a
+    deep base lineage (e.g. the raw-OSM extraction: ring-assembly
+    applyInPandas + window + joins) the composed plan tree grows
+    multiplicatively and Catalyst/AQE plan handling alone can OOM the
+    driver. The zone dim is broadcast-scale, so materializing each stage
+    is cheap; at planet scale pass ``root`` and stages become parquet
+    snapshots (which truncate lineage by construction, plus resume)."""
     if root is None:
         return fn().localCheckpoint(eager=True)
     if is_committed(root, stage):

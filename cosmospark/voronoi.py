@@ -28,14 +28,12 @@ places per parent are few, so this stays comfortably parallel.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from cosmospark import geom
-from cosmospark.assign import ZoneIndex as PointZoneIndex
+from cosmospark.assign import assign_zones
 from cosmospark.ztypes import TYPE_RANK
 
 
@@ -246,24 +244,11 @@ def compute_additional_places(
         & (type_rank_expr() >= TYPE_RANK["city"])
         & F.col("rings").isNotNull()
     )
-    zrows = [
-        r.asDict(recursive=True)
-        for r in parent_side.select("id", "zone_type", "rings").collect()
-    ]
-    pindex = PointZoneIndex(zrows)
-    bc = spark.sparkContext.broadcast(pindex)
-
-    p_schema = T.StructType(cand.schema.fields + [T.StructField("parent", T.LongType())])
-
-    def _find_parent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = bc.value
-        for pdf in batches:
-            lon = pdf["lon"].to_numpy(dtype=np.float64)
-            lat = pdf["lat"].to_numpy(dtype=np.float64)
-            pdf["parent"] = idx.assign(lon, lat)
-            yield pdf
-
-    with_parent = cand.mapInPandas(_find_parent, p_schema).filter(F.col("parent") >= 0)
+    with_parent = (
+        assign_zones(cand, parent_side)
+        .withColumnRenamed("zone_id", "parent")
+        .filter(F.col("parent") >= 0)
+    )
 
     # (3) parent-type constraints (additional_zones.rs:55-72)
     pmeta = zones.select(

@@ -220,6 +220,62 @@ class TestSparkJobs:
             A.BROADCAST_BUDGET_BYTES = saved
         assert [r["zone_id"] for r in part0] == [r["zone_id"] for r in base]
 
+    def test_partitioned_knn_uses_geometry_centroids(self, spark):
+        # both strategies fall back to the nearest GEOMETRY centroid:
+        # zone 1's `center` (10, 10) is not its polygon centroid
+        # (0.5, 0.5), zone 3 has a center but no rings, and ties go to
+        # the smallest zone id whatever the row order. Points: nearest
+        # to zone 1's centroid, a 1-vs-2 tie, next to zone 3's center,
+        # inside zone 1
+        def square(x0):
+            return geom.rings_to_rows(geom.make_rect(x0, 0.0, x0 + 1.0, 1.0))
+
+        rows = [
+            {"id": 2, "osm_id": "r2", "zone_type": "city",
+             "center": {"lon": 5.5, "lat": 0.5}, "rings": square(5.0)},
+            {"id": 3, "osm_id": "r3", "zone_type": "city",
+             "center": {"lon": 20.0, "lat": 20.0}, "rings": None},
+            {"id": 1, "osm_id": "r1", "zone_type": "city",
+             "center": {"lon": 10.0, "lat": 10.0}, "rings": square(0.0)},
+        ]
+        zones = spark.createDataFrame(rows, schema=ZONES_RAW_SCHEMA)
+        pdf = spark.createDataFrame(
+            [(0, 2.0, 0.5), (1, 3.0, 0.5), (2, 20.0, 19.0), (3, 0.5, 0.5)],
+            "pid long, lon double, lat double",
+        )
+        base = assign_zones(pdf, zones, knn_fallback=True).orderBy("pid").collect()
+        part = assign_zones(
+            pdf, zones, strategy="partitioned", id_col="pid", knn_fallback=True
+        ).orderBy("pid").collect()
+        assert [r["zone_id"] for r in base] == [1, 1, 2, 1]
+        assert [r["zone_id"] for r in part] == [r["zone_id"] for r in base]
+
+    def test_zone_cells_match_index_csr(self, spark):
+        # the partitioned path's (res, cell, zone_id, full) rows and the
+        # broadcast ZoneIndex CSR come from one covering function
+        from cosmospark.assign import _zone_cells_with_full
+        from cosmospark.fixtures import detailed_lux_zones
+
+        rows = detailed_lux_zones(64)
+        idx = ZoneIndex(rows, max_cells=64)
+        from_csr = []
+        for res in idx.res_list:
+            cell_ids, offs, zids, fulls = idx.csr[res]
+            assert (np.diff(cell_ids) > 0).all()
+            assert offs[0] == 0 and offs[-1] == len(zids) == len(fulls)
+            for i, c in enumerate(cell_ids):
+                for j in range(offs[i], offs[i + 1]):
+                    from_csr.append((res, int(c), int(zids[j]), bool(fulls[j])))
+        zones = spark.createDataFrame(rows, schema=ZONES_RAW_SCHEMA)
+        from_df = [
+            (r["res"], r["cell"], r["zone_id"], r["full"])
+            for r in _zone_cells_with_full(zones, 64)
+            .select("res", "cell", "zone_id", "full")
+            .collect()
+        ]
+        assert sorted(from_df) == sorted(from_csr)
+        assert any(f for *_, f in from_csr) and not all(f for *_, f in from_csr)
+
     def test_partitioned_bucket_regrouping(self, spark, monkeypatch):
         # r7: the cogroup keys on a hash BUCKET of (res, cell), and the
         # kernel regroups per cell internally. Force every cell into
