@@ -83,7 +83,11 @@ def cell_bounds_batch(cell: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarra
     """(minx, miny, maxx, maxy) arrays for a batch of cells — ONE Morton
     decode over the whole array (the per-cell scalar ``cell_bounds`` in
     a Python loop dominates index-build time at 1000 cells/zone)."""
-    x, y = morton_deinterleave(np.asarray(cell, dtype=np.int64), res)
+    return grid_bounds(*morton_deinterleave(np.asarray(cell, dtype=np.int64), res), res)
+
+
+def grid_bounds(x: np.ndarray, y: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(minx, miny, maxx, maxy) arrays for res-cells given by grid x/y."""
     n = float(1 << res)
     w = 360.0 / n
     h = 180.0 / n

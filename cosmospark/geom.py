@@ -449,7 +449,7 @@ def rects_classify(
     always trips edge_hit (its edges' bboxes overlap the rect), so class
     0/1 are never wrong; class 2 may include rects an exact test would
     resolve — those just pay the per-pixel kernel. This powers the
-    hierarchical raster descent (``raster.zone_raster_cover``)."""
+    hierarchical raster descent (``raster._descend``)."""
     minx = np.asarray(minx, dtype=np.float64)
     miny = np.asarray(miny, dtype=np.float64)
     maxx = np.asarray(maxx, dtype=np.float64)

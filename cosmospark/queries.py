@@ -3009,11 +3009,14 @@ def q_doc_fingerprint(spark, sf_dir):
     long, no overflow below ~10⁹-word docs × 3100/term) — identical
     integers, with the per-word arithmetic in whole-stage codegen and
     the exchange carrying doc-scale partial sums. `split` never yields
-    an empty array, so no doc_id disappears from the aggregate."""
+    an empty array for a non-NULL text, and `explode_outer` keeps a
+    NULL-text doc as one NULL word, so no doc_id disappears from the
+    aggregate: a NULL text gets a NULL fingerprint, as in the oracle
+    (`string_split(NULL)` is NULL)."""
     d = _widen_if_narrow(
         spark, _t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    ex = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    ex = d.select("doc_id", F.explode_outer(F.split("text", " ")).alias("w"))
     term = F.expr("length(w) * 31 + coalesce(ascii(substring(w, 1, 1)), 0)")
     return (
         ex.groupBy("doc_id")
@@ -3848,8 +3851,10 @@ def _simhash_fp_df(d, keys: list[str]):
     order-independent sums, same `> 0` assembly — shiftright/%2
     semantics untouched) with every op in whole-stage codegen; the
     exchange carries doc-scale partial vote vectors (64 longs/doc),
-    and split() never yields an empty array (worst case [""]), so no
-    group disappears."""
+    and split() never yields an empty array for a non-NULL text (worst
+    case [""]), so no such group disappears. A doc whose text is NULL
+    has no words and no group, as in the oracle, whose
+    `unnest(string_split(NULL))` yields no rows."""
     n = SIMHASH_BITS
     # hash each word ONCE in a standalone projection: Catalyst's
     # CollapseProject keeps a non-cheap alias referenced 64× as its own

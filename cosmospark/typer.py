@@ -47,56 +47,11 @@ RULES_ID_SCHEMA = T.StructType(
         T.StructField("zone_type", T.StringType(), True),  # NULL = explicitly untyped
     ]
 )
-RULES_CONTAINED_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("container_osm_id", T.StringType(), False),
-        T.StructField("admin_level", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), False),
-    ]
-)
-# id overrides scoped to a container's sub-rules (zone_typer.rs:196-204:
-# every CountryAdminTypeRules carries its own overrides.id map, and the
-# contained_by recursion checks it FIRST): "inside container, zone
-# osm_id types as zone_type (NULL = explicitly untyped)"
-RULES_CONTAINED_ID_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("container_osm_id", T.StringType(), False),
-        T.StructField("osm_id", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), True),
-    ]
-)
-# second nesting hop (zone_typer.rs:143-157 evaluates contained_by
-# RECURSIVELY; libpostal data nests at most one extra level in practice,
-# so two hops cover it — deeper nests raise at parse time rather than
-# silently mistype):
-# "inside outer_container, zones inside inner_container type by this map"
-RULES_CONTAINED2_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("outer_container_osm_id", T.StringType(), False),
-        T.StructField("inner_container_osm_id", T.StringType(), False),
-        T.StructField("admin_level", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), False),
-    ]
-)
-# id overrides scoped to the INNER (second-hop) container's sub-rules
-RULES_CONTAINED2_ID_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("outer_container_osm_id", T.StringType(), False),
-        T.StructField("inner_container_osm_id", T.StringType(), False),
-        T.StructField("osm_id", T.StringType(), False),
-        T.StructField("zone_type", T.StringType(), True),
-    ]
-)
-
 # normalized chain-keyed representation (r5: the generalized bounded
 # contained_by loop, VERDICT r4 #3): one table per rule kind for ALL
 # depths, keyed by the chain of container osm_ids from the outermost
-# hop inward. The legacy depth-1/-2 tables above remain accepted
-# make_rules inputs and are folded into these.
+# hop inward. make_rules also accepts the legacy depth-1/-2 argument
+# shapes and folds them into these.
 RULES_CHAIN_LEVELS_SCHEMA = T.StructType(
     [
         T.StructField("country", T.StringType(), False),
@@ -379,13 +334,16 @@ def make_rules(
     contained_chain_levels: list[tuple] = (),
     contained_chain_ids: list[tuple] = (),
 ) -> dict[str, DataFrame]:
-    """Build the rule-table dict. The legacy depth-1/-2 argument shapes
-    and the generalized chain shapes ((country, depth, chain, ...,
-    zone_type), any depth) are both accepted; everything is folded into
-    the normalized ``contained_levels`` / ``contained_ids`` tables that
-    ``type_zones`` consumes. The legacy per-depth tables remain in the
-    dict (built from the legacy args only) for callers that inspect
-    them."""
+    """Build the rule-table dict: ``levels``, ``id_overrides``,
+    ``contained_levels`` and ``contained_ids``. The legacy depth-1/-2
+    argument shapes — ``contained_by`` (country, container_osm_id,
+    admin_level, zone_type), ``contained_by2`` (country, outer, inner,
+    admin_level, zone_type) and the matching id overrides with
+    (osm_id, zone_type) in place of (admin_level, zone_type) — and the
+    generalized chain shapes ((country, depth, chain, ..., zone_type),
+    any depth) are both accepted; everything is folded into the
+    normalized ``contained_levels`` / ``contained_ids`` tables that
+    ``type_zones`` consumes."""
     chain_levels = [
         (cc, 1, [outer], lvl, zt) for cc, outer, lvl, zt in contained_by
     ] + [
@@ -406,16 +364,6 @@ def make_rules(
             chain_levels, RULES_CHAIN_LEVELS_SCHEMA
         ),
         "contained_ids": spark.createDataFrame(chain_ids, RULES_CHAIN_ID_SCHEMA),
-        "contained_by": spark.createDataFrame(list(contained_by), RULES_CONTAINED_SCHEMA),
-        "contained_by2": spark.createDataFrame(
-            list(contained_by2), RULES_CONTAINED2_SCHEMA
-        ),
-        "contained_id_overrides": spark.createDataFrame(
-            list(contained_id_overrides), RULES_CONTAINED_ID_SCHEMA
-        ),
-        "contained_id_overrides2": spark.createDataFrame(
-            list(contained_id_overrides2), RULES_CONTAINED2_ID_SCHEMA
-        ),
     }
 
 

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from cosmospark import geom
 from cosmospark.assign import assign_zones
+from cosmospark.hierarchy import type_rank_col
 from cosmospark.ztypes import TYPE_RANK
 
 
@@ -241,7 +242,7 @@ def compute_additional_places(
     parent_side = zones.filter(
         F.col("zone_type").isNotNull()
         & (F.col("zone_type") != "non_administrative")
-        & (type_rank_expr() >= TYPE_RANK["city"])
+        & (type_rank_col(F.col("zone_type")) >= TYPE_RANK["city"])
         & F.col("rings").isNotNull()
     )
     with_parent = (
@@ -257,9 +258,9 @@ def compute_additional_places(
         F.col("name").alias("p_name"),
     )
     ranked = with_parent.join(F.broadcast(pmeta), "parent").filter(
-        (type_rank_expr("p_type") >= type_rank_expr("zone_type"))
+        (type_rank_col(F.col("p_type")) >= type_rank_col(F.col("zone_type")))
         & (
-            (type_rank_expr("p_type") < TYPE_RANK["country"])
+            (type_rank_col(F.col("p_type")) < TYPE_RANK["country"])
             | (F.col("p_name") == F.col("name"))
         )
     )
@@ -324,13 +325,6 @@ def compute_additional_places(
         return pd.DataFrame(out, columns=[f.name for f in _NEW_ZONE_SCHEMA.fields])
 
     return ranked.groupBy("parent").applyInPandas(_voronoi, _NEW_ZONE_SCHEMA)
-
-
-def type_rank_expr(col: str = "zone_type"):
-    expr = F.lit(None).cast("int")
-    for name, rank in sorted(TYPE_RANK.items()):
-        expr = F.when(F.col(col) == name, F.lit(rank)).otherwise(expr)
-    return expr
 
 
 def publish_new_places(zones: DataFrame, new_zones: DataFrame) -> DataFrame:

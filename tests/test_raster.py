@@ -271,14 +271,15 @@ def test_hierarchical_cover_sound_vs_pixel_oracle():
     import numpy as np
 
     from cosmospark import cells, geom
-    from cosmospark.raster import _pixel_centers, zone_raster_cover
+    from cosmospark.raster import _QUADKEY, _pixel_centers, zone_raster_cover
 
     rr = _star_rings()
     res = 5
     full, bnd = zone_raster_cover(rr, res)
     minx, miny, maxx, maxy = geom.bbox(rr)
     cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-    lon_c, lat_c = _pixel_centers(cc, res, 8)
+    cx, cy = cells.morton_deinterleave(cc, res)
+    lon_c, lat_c = _pixel_centers(_QUADKEY, cx, cy, res, 8)
     hit = geom.pip_covers(lon_c.ravel(), lat_c.ravel(), rr).reshape(len(cc), 64)
     full_s, bnd_s = set(full.tolist()), set(bnd.tolist())
     assert full_s.isdisjoint(bnd_s)
@@ -296,7 +297,11 @@ def test_planet_zone_bounded_kernel_chunks():
     MULTIPLE bounded kernel calls (no single multi-GB allocation), and
     the descent must classify FAR fewer cells than the bbox cover."""
     from cosmospark import geom
-    from cosmospark.raster import _bbox_cell_count, _zone_bitset_row_batches
+    from cosmospark.raster import (
+        _QUADKEY,
+        _bbox_cell_count,
+        _zone_bitset_row_batches,
+    )
 
     rr = _star_rings(n=36, r0=40.0, r1=60.0, cx=0.0, cy=0.0)  # 120° across
     minx, miny, maxx, maxy = geom.bbox(rr)
@@ -306,7 +311,7 @@ def test_planet_zone_bounded_kernel_chunks():
     n_rows = 0
     max_batch = 0
     for rows in _zone_bitset_row_batches(
-        1, 0, 1.0, rr, res, max_pixels=1 << 16, stats=stats
+        _QUADKEY, 1, 0, 1.0, rr, res, max_pixels=1 << 16, stats=stats
     ):
         n_rows += len(rows)
         max_batch = max(max_batch, len(rows))
@@ -315,7 +320,7 @@ def test_planet_zone_bounded_kernel_chunks():
     # bounded; and hierarchical descent touched a small multiple of the
     # PERIMETER, not the bbox area
     assert max_batch <= (1 << 16) // 64
-    bbox_cells = _bbox_cell_count(minx, miny, maxx, maxy, res)
+    bbox_cells = _bbox_cell_count(_QUADKEY, (minx, miny, maxx, maxy), res)
     assert stats["cells_classified"] < bbox_cells / 4, (
         stats["cells_classified"],
         bbox_cells,
@@ -323,32 +328,54 @@ def test_planet_zone_bounded_kernel_chunks():
     assert n_rows > 1000  # the zone did rasterize
 
 
-def test_hierarchical_mask_rows_match_single_level_oracle():
-    """Row-for-row equality of the descent path against a brute-force
-    single-level rasterization (every bbox cell through the kernel)."""
-    import numpy as np
+def _quadkey_bbox_cells(bb, res):
+    cc = cells.cells_for_bbox(*bb, res)
+    return cc, *cells.morton_deinterleave(cc, res)
 
-    from cosmospark import cells, geom
-    from cosmospark.raster import (
-        _mask_rows,
-        _pixel_centers,
-        _zone_mask_row_batches,
+
+def _mercator_bbox_tiles(bb, z):
+    minx, miny, maxx, maxy = bb
+    tx0, ty1 = cells.tile_xy(np.array([minx]), np.array([miny]), z)
+    tx1, ty0 = cells.tile_xy(np.array([maxx]), np.array([maxy]), z)
+    gx, gy = np.meshgrid(
+        np.arange(tx0[0], tx1[0] + 1), np.arange(ty0[0], ty1[0] + 1), indexing="ij"
     )
+    gx, gy = gx.ravel(), gy.ravel()
+    return (np.int64(z) << 58) | (gx << 29) | gy, gx, gy  # tile_encode packing
+
+
+def _assert_mask_rows_match_single_level(grid, bbox_cells):
+    from cosmospark import geom
+    from cosmospark.raster import _mask_rows, _pixel_centers, _zone_mask_row_batches
 
     rr = _star_rings()
     res, px = 4, 8
     got = {}
-    for rows in _zone_mask_row_batches(7, rr, res, px, max_pixels=1 << 12):
+    for rows in _zone_mask_row_batches(grid, 7, rr, res, px, max_pixels=1 << 12):
         for r in rows:
             got[r["cell"]] = (r["mask"], r["n_inside"])
-    minx, miny, maxx, maxy = geom.bbox(rr)
-    cc = cells.cells_for_bbox(minx, miny, maxx, maxy, res)
-    lon_c, lat_c = _pixel_centers(cc, res, px)
+    cc, cx, cy = bbox_cells(geom.bbox(rr), res)
+    lon_c, lat_c = _pixel_centers(grid, cx, cy, res, px)
     want = {
         r["cell"]: (r["mask"], r["n_inside"])
         for r in _mask_rows(7, rr, lon_c, lat_c, cc)
     }
     assert got == want
+
+
+def test_hierarchical_mask_rows_match_single_level_oracle():
+    """Row-for-row equality of the descent path against a brute-force
+    single-level rasterization (every bbox cell through the kernel)."""
+    from cosmospark.raster import _QUADKEY
+
+    _assert_mask_rows_match_single_level(_QUADKEY, _quadkey_bbox_cells)
+
+
+def test_tile_hierarchical_mask_rows_match_single_level_oracle():
+    """The same row-for-row check on the mercator tile pyramid."""
+    from cosmospark.raster import _MERCATOR
+
+    _assert_mask_rows_match_single_level(_MERCATOR, _mercator_bbox_tiles)
 
 
 def test_lut_build_mode_validated_against_exact_flag(spark):
@@ -427,7 +454,7 @@ def test_tile_hierarchical_cover_sound():
     import numpy as np
 
     from cosmospark import cells, geom
-    from cosmospark.raster import _tile_pixel_centers, tile_raster_cover
+    from cosmospark.raster import _MERCATOR, _pixel_centers, tile_raster_cover
 
     rr = _star_rings()
     z = 5
@@ -439,7 +466,7 @@ def test_tile_hierarchical_cover_sound():
         np.arange(tx0[0], tx1[0] + 1), np.arange(ty0[0], ty1[0] + 1), indexing="ij"
     )
     gx, gy = gx.ravel(), gy.ravel()
-    lon_c, lat_c = _tile_pixel_centers(gx, gy, z, 8)
+    lon_c, lat_c = _pixel_centers(_MERCATOR, gx, gy, z, 8)
     hit = geom.pip_covers(lon_c.ravel(), lat_c.ravel(), rr).reshape(len(gx), 64)
     full_s = set(zip(fx.tolist(), fy.tolist()))
     bnd_s = set(zip(bx.tolist(), by.tolist()))
@@ -623,21 +650,24 @@ def test_lazy_full_expansion_matches_eager_and_bounds_chunks():
     cells lazily. The chunked iterator must (a) reproduce the eager
     zone_raster_cover full set exactly, (b) never yield a chunk larger
     than ~step, and (c) keep the descent state coarse (no materialized
-    interior inside _coarse_cover's groups)."""
+    interior inside _descend's groups)."""
     import numpy as np
 
     from cosmospark.raster import (
-        _coarse_cover,
-        _iter_full_cells,
+        _QUADKEY,
+        _descend,
+        _iter_full,
         zone_raster_cover,
     )
 
     rr = _star_rings()
     res = 7
     eager_full, _ = zone_raster_cover(rr, res)
-    groups, _ = _coarse_cover(rr, res)
+    groups, _, _ = _descend(_QUADKEY, rr, res)
     step = 64
-    chunks = list(_iter_full_cells(groups, res, step))
+    chunks = [
+        cells.morton_interleave(x, y, res) for x, y in _iter_full(groups, res, step)
+    ]
     assert chunks, "star zone has an interior at res 7"
     # (b) bounded chunks: a group of coarse cells each expanding to
     # `per` descendants may overshoot by < per, never by a full interior
@@ -647,7 +677,7 @@ def test_lazy_full_expansion_matches_eager_and_bounds_chunks():
     assert sorted(lazy_full.tolist()) == sorted(eager_full.tolist())
     # (c) the descent itself holds only coarse/unexpanded cells:
     # strictly fewer stored entries than the expanded interior
-    stored = sum(len(g) for g, _r in groups)
+    stored = sum(len(g[0]) for g in groups)
     assert stored < len(eager_full)
 
 
@@ -760,22 +790,23 @@ def test_skewed_lut_shuffle_join_aqe_split(spark):
 
 def test_lazy_tile_expansion_matches_eager():
     """Mercator twin of the quadkey lazy-expansion test: chunked
-    _iter_full_tiles must reproduce tile_raster_cover's full set exactly
+    _iter_full must reproduce tile_raster_cover's full set exactly
     with bounded chunk sizes and a coarse (unexpanded) descent state."""
     import numpy as np
 
     from cosmospark.raster import (
-        _iter_full_tiles,
-        _tile_coarse_cover,
+        _MERCATOR,
+        _descend,
+        _iter_full,
         tile_raster_cover,
     )
 
     rr = _star_rings()
     z = 7
     fx, fy, _, _ = tile_raster_cover(rr, z)
-    groups, _, _ = _tile_coarse_cover(rr, z)
+    groups, _, _ = _descend(_MERCATOR, rr, z)
     step = 32
-    chunks = list(_iter_full_tiles(groups, z, step))
+    chunks = list(_iter_full(groups, z, step))
     assert chunks, "star zone has an interior at z 7"
     assert max(len(cx) for cx, _cy in chunks) <= 2 * step
     lazy = {(int(a), int(b)) for cx, cy in chunks for a, b in zip(cx, cy)}

@@ -121,6 +121,25 @@ def test_gopher_repetition_crafted(spark, tmp_path):
     pd.testing.assert_frame_equal(got, ora, check_dtype=False)
 
 
+def test_doc_fingerprint_null_text_matches_oracle(spark, tmp_path):
+    """A NULL-text doc keeps its row with a NULL fingerprint, as in the
+    DuckDB oracle; the sf fixtures have no NULL text."""
+    from cosmospark.queries import SQL_FINGERPRINT, q_doc_fingerprint
+
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [(1, "a bb ccc"), (2, None), (3, ""), (4, "x")], "doc_id long, text string"
+    ).coalesce(1).write.parquet(f"{sf}/documents.parquet")
+
+    got = [tuple(r) for r in q_doc_fingerprint(spark, sf).collect()]
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
+    )
+    ora = con.sql(SQL_FINGERPRINT).fetchall()
+    assert got == ora == [(1, 480), (2, None), (3, 0), (4, 151)]
+
+
 def test_stratified_sample_rates_and_determinism(spark):
     from cosmospark.queries import (
         _SAMPLE_MOD,
